@@ -21,22 +21,42 @@ def _local_scratch() -> str:
     the tmpfs default: shuffle *spill* exists to relieve memory pressure,
     so when /dev/shm is already scarce (< 4 GiB free) spilling into RAM
     would convert memory pressure into ENOSPC — fall back to the system
-    temp dir instead."""
+    temp dir instead.  An explicit ``$SPARK_GRAFT_SCRATCH_DIR`` is used
+    as given."""
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
         return override
-    from hadrodb_spark.config import scratch_dir
+    from hadrodb_spark.config import SCRATCH_ENV, scratch_dir
 
     root = scratch_dir()
-    try:
-        st = os.statvfs(root)
-        if st.f_bavail * st.f_frsize < 4 * 1024**3:
-            import tempfile
+    if not os.environ.get(SCRATCH_ENV):
+        try:
+            st = os.statvfs(root)
+            if st.f_bavail * st.f_frsize < 4 * 1024**3:
+                import tempfile
 
-            return tempfile.gettempdir()
-    except OSError:
-        pass
+                return tempfile.gettempdir()
+        except OSError:
+            pass
     return os.path.join(root, "spark_local")
+
+
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def _state_store_conf() -> dict[str, str]:
+    """State-store confs: the provider (``$SPARK_GRAFT_STATESTORE_PROVIDER``,
+    default RocksDB) plus, only when that provider is RocksDB, its
+    changelog checkpointing."""
+    provider = os.environ.get("SPARK_GRAFT_STATESTORE_PROVIDER", _ROCKSDB_PROVIDER)
+    conf = {"spark.sql.streaming.stateStore.providerClass": provider}
+    if provider == _ROCKSDB_PROVIDER:
+        conf[
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        ] = "true"
+    return conf
 
 
 def get_spark(
@@ -51,7 +71,9 @@ def get_spark(
     at runtime so the static number only needs to be in the right ballpark.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
@@ -116,19 +138,7 @@ def get_spark(
         # per-batch delta instead of re-snapshotting the full store.
         # Results are provider-invariant (state layout, not semantics);
         # env-overridable for deployments standardized on the HDFS store.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATESTORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            ),
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+        .config(map=_state_store_conf())
         .config(
             "spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI_ENABLED", "false")
         )

@@ -32,6 +32,17 @@ Scale design: merge-on-read costs one hash shuffle on ``_key``; ``compact()``
 rewrites to the LWW view so steady-state reads are pure Parquet scans with
 predicate pushdown / column pruning (which the reference's ``scan()`` accepts
 but ignores — ``hadro/engine.py:139``; Spark honors both for free).
+
+Each step is defined once:
+
+- commit path: ``_versions`` / ``_tombstones`` build the rows,
+  ``_observe_stats`` observes their stats during the write, and
+  ``_stats_entry`` is every manifest stats entry; rewrites go through
+  ``_write_tmp`` (a fresh tmp dir per call).
+- view path: each public read takes ONE ``_Snapshot`` (manifest head +
+  one data-dir walk) and passes it to the pruning helpers and to
+  ``_view``, the one LWW view (scans, point reads, time travel, and the
+  range-merge input).
 """
 
 from __future__ import annotations
@@ -40,10 +51,11 @@ import hashlib
 import json
 import logging
 import os
+import shutil
 import threading
 import uuid
-from collections.abc import Iterable, Mapping, Sequence
-from typing import Any
+from collections.abc import Callable, Iterable, Mapping, Sequence
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -375,6 +387,64 @@ def _bloom_maybe(bloom_hex: str, key: str) -> bool:
     return all((bits >> p) & 1 for p in _bloom_positions(key))
 
 
+def _stats_entry(
+    rows: int,
+    tombstones: int,
+    min_key: str | None,
+    max_key: str | None,
+    unique_keys: bool | None,
+) -> dict[str, Any]:
+    """One commit's manifest statistics entry (see
+    ``HadroCollection._record_segment_stats``)."""
+    return {
+        "rows": int(rows),
+        "tombstones": int(tombstones),
+        "min_key": min_key,
+        "max_key": max_key,
+        "unique_keys": unique_keys,
+    }
+
+
+def _observe_stats(
+    df: DataFrame, deleted: bool | None
+) -> tuple[DataFrame, Callable[[], dict[str, Any]]]:
+    """Piggyback a commit's stats on its write action (``observe`` — no
+    second scan).  ``deleted``: the ``_deleted`` value of every row, or
+    None for mixed rows, whose tombstones are then counted.  The returned
+    function gives the ``_stats_entry`` counts once the write has run."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if deleted is None:
+        aggs.append(F.sum(F.col(DELETED_COL).cast("long")).alias("tombstones"))
+    aggs += [F.min(KEY_COL).alias("min_key"), F.max(KEY_COL).alias("max_key")]
+
+    def stats() -> dict[str, Any]:
+        got = obs.get
+        rows = int(got["rows"])
+        if deleted is None:
+            tombstones = int(got["tombstones"] or 0)
+        else:
+            tombstones = rows if deleted else 0
+        return {
+            "rows": rows,
+            "tombstones": tombstones,
+            "min_key": got["min_key"],
+            "max_key": got["max_key"],
+        }
+
+    return df.observe(obs, *aggs), stats
+
+
+class _Snapshot(NamedTuple):
+    """What one read call sees: the manifest head and the data dir's
+    ``_seq=N`` commit dirs, read once (manifest first, so a commit it
+    records is complete on disk by the time the dir walk runs)."""
+
+    manifest: dict[str, Any]
+    seqs: list[int]
+    has_data: bool  # any parquet file under the data dir
+
+
 def _internal_fields() -> list[T.StructField]:
     return [
         T.StructField(KEY_COL, T.StringType(), nullable=False),
@@ -581,35 +651,28 @@ class HadroCollection:
         data, it's *finding which files could hold the key* — these bounds
         answer that on the driver without listing or opening any segment."""
 
+        entry = {
+            **_stats_entry(rows, tombstones, min_key, max_key, unique_keys),
+            "key_bloom": key_bloom,
+        }
+
         def put(m: dict[str, Any]) -> None:
-            m["segments"][str(commit)] = {
-                "rows": int(rows),
-                "tombstones": int(tombstones),
-                "min_key": min_key,
-                "max_key": max_key,
-                "unique_keys": unique_keys,
-                "key_bloom": key_bloom,
-            }
+            m["segments"][str(commit)] = entry
             m["clean"] = False  # any append may shadow existing keys
             m.setdefault("inflight", {}).pop(str(commit), None)
 
         self._update_manifest(put)
 
-    def _reset_segment_stats(self, commit: int, rows: int, min_key, max_key) -> None:
+    def _reset_segment_stats(
+        self, commit: int, rows: int, tombstones: int, min_key, max_key
+    ) -> None:
         """After compact/optimize the log IS the live view: one commit,
         no tombstones, unique keys — mark it ``clean`` so reads skip the
         LWW merge entirely until the next write dirties the log."""
+        entry = _stats_entry(rows, tombstones, min_key, max_key, True)
 
         def put(m: dict[str, Any]) -> None:
-            m["segments"] = {
-                str(commit): {
-                    "rows": int(rows),
-                    "tombstones": 0,
-                    "min_key": min_key,
-                    "max_key": max_key,
-                    "unique_keys": True,
-                }
-            }
+            m["segments"] = {str(commit): entry}
             m["clean"] = True
             # a full rewrite runs quiesced by contract and just erased
             # every prior commit's history — any surviving in-flight
@@ -620,18 +683,31 @@ class HadroCollection:
 
         self._update_manifest(put)
 
+    def _walk_data(self) -> tuple[list[int], bool]:
+        """One walk of the data dir: the commit ids actually present on
+        disk (``_seq=N`` hive dirs) and whether any parquet file exists.
+        The walk stops at the first directory holding a parquet file."""
+        seqs: list[int] = []
+        for root, dirs, files in os.walk(self._data_path):
+            if root == self._data_path:
+                for name in dirs:
+                    core = name[len(SEQ_COL) + 1 :]
+                    if name.startswith(SEQ_COL + "=") and core.isdigit():
+                        seqs.append(int(core))
+            if any(f.endswith(".parquet") for f in files):
+                return sorted(seqs), True
+        return sorted(seqs), False
+
     def _seq_dirs(self) -> list[int]:
         """Commit ids actually present on disk (``_seq=N`` hive dirs)."""
-        if not os.path.isdir(self._data_path):
-            return []
-        out = []
-        for name in os.listdir(self._data_path):
-            if name.startswith(SEQ_COL + "="):
-                try:
-                    out.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return self._walk_data()[0]
+
+    def _snapshot(self) -> _Snapshot:
+        """Flush, then read the manifest head and walk the data dir once —
+        the state every step of one public read call works from."""
+        self.flush()
+        manifest = self._read_manifest()
+        return _Snapshot(manifest, *self._walk_data())
 
     def segment_stats(self) -> dict[int, dict[str, Any]]:
         """Per-commit manifest statistics (public introspection surface)."""
@@ -657,23 +733,27 @@ class HadroCollection:
 
         self._update_manifest(drop)
 
-    def _stats_if_complete(self) -> dict[int, dict[str, Any]] | None:
+    def _stats_if_complete(
+        self, snap: _Snapshot | None = None
+    ) -> dict[int, dict[str, Any]] | None:
         """Stats keyed by commit id, or None if any on-disk commit dir has
         no manifest entry (e.g. a collection written by an older version) —
         callers must then fall back to the distributed path."""
-        segs = self.segment_stats()
-        on_disk = self._seq_dirs()
-        if any(n not in segs for n in on_disk):
+        snap = snap or self._snapshot()
+        segs = snap.manifest["segments"]
+        if any(str(n) not in segs for n in snap.seqs):
             return None
-        return {n: segs[n] for n in on_disk}
+        return {n: segs[str(n)] for n in snap.seqs}
 
-    def _candidate_seqs(self, keys: Sequence[str]) -> list[int] | None:
+    def _candidate_seqs(
+        self, keys: Sequence[str], snap: _Snapshot | None = None
+    ) -> list[int] | None:
         """Commits whose ``[min_key, max_key]`` — and, when present, key
         bloom — could contain any of ``keys`` (every version of a key,
         including its tombstones, lies in a commit whose bounds cover it
         and whose bloom was built over it, so pruning the rest preserves
         LWW). None ⇒ stats incomplete, caller reads everything."""
-        stats = self._stats_if_complete()
+        stats = self._stats_if_complete(snap)
         if stats is None:
             return None
         cands = []
@@ -689,20 +769,18 @@ class HadroCollection:
                 cands.append(n)
         return cands
 
-    def _len_fast(self) -> int | None:
+    def _len_fast(self, snap: _Snapshot | None = None) -> int | None:
         """Driver-only ``len()`` when the manifest can prove it: the log is
         ``clean`` (post-compaction), or no commit has tombstones, every
         commit's keys are known-unique, and commit key ranges are pairwise
         disjoint (the time-keyed append-only case — exactly the 100 TB log
         workload). Returns None when correctness would require the merge."""
-        if self._pending:
-            return None
-        stats = self._stats_if_complete()
+        snap = snap or self._snapshot()
+        stats = self._stats_if_complete(snap)
         if stats is None:
             return None
-        total = sum(s["rows"] for s in stats.values())
-        if self._read_manifest()["clean"]:
-            return total
+        if snap.manifest["clean"]:
+            return sum(s["rows"] for s in stats.values())
         if any(s["tombstones"] for s in stats.values()):
             return None
         if any(s.get("unique_keys") is not True for s in stats.values()):
@@ -793,42 +871,55 @@ class HadroCollection:
             keyed = df.withColumn(KEY_COL, F.col(key_col).cast("string"))
         else:
             keyed = df.withColumn(KEY_COL, F.expr("uuid()"))
-        out = (
-            keyed.withColumn(SEQ_COL, F.lit(commit).cast("long"))
-            # intra-commit tiebreak, only relevant for duplicate keys inside
-            # ONE bulk commit: a DataFrame carries no row order, so the
-            # winner is defined as the row with the greatest content hash —
-            # deterministic under task retry / speculative execution (unlike
-            # monotonically_increasing_id, whose partition→id mapping can
-            # shift on re-run) and map-only (a row_number window would cost
-            # a full shuffle on every bulk append)
-            .withColumn(
-                SUB_COL,
-                F.xxhash64(*[F.col(f.name) for f in self.schema.fields]),
-            )
-            .withColumn(DELETED_COL, F.lit(False))
-            .select(*INTERNAL_COLS, *[f.name for f in self.schema.fields])
-        )
-        # piggyback stats on the write action itself (observe = no 2nd scan)
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
+        self._commit_df(
+            self._versions(keyed, commit),
             commit,
-            rows=got["rows"],
-            tombstones=0,
-            min_key=got["min_key"],
-            max_key=got["max_key"],
+            deleted=False,
             # generated uuids are unique; caller-supplied keys may collide
             # within the commit, and proving otherwise would cost a shuffle
             unique_keys=True if key_col is None else None,
         )
+
+    def _versions(self, keyed: DataFrame, commit: int) -> DataFrame:
+        """New-version rows of ``keyed`` (user columns plus ``_key``) at
+        ``commit``.  The intra-commit tiebreak ``_sub`` only matters for
+        duplicate keys inside ONE commit: a DataFrame carries no row order,
+        so the winner is defined as the row with the greatest content hash
+        — deterministic under task retry / speculative execution (unlike
+        monotonically_increasing_id, whose partition→id mapping can shift
+        on re-run) and map-only (a row_number window would cost a full
+        shuffle on every bulk append)."""
+        user = [f.name for f in self.schema.fields]
+        return keyed.select(
+            F.col(KEY_COL),
+            F.lit(commit).cast("long").alias(SEQ_COL),
+            F.xxhash64(*[F.col(c) for c in user]).alias(SUB_COL),
+            F.lit(False).alias(DELETED_COL),
+            *user,
+        )
+
+    def _tombstones(self, keys: DataFrame, commit: int) -> DataFrame:
+        """Tombstone rows at ``commit`` for every ``_key`` in ``keys``."""
+        return keys.select(
+            F.col(KEY_COL),
+            F.lit(commit).cast("long").alias(SEQ_COL),
+            F.lit(0).cast("long").alias(SUB_COL),
+            F.lit(True).alias(DELETED_COL),
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields],
+        )
+
+    def _commit_df(
+        self,
+        out: DataFrame,
+        commit: int,
+        deleted: bool | None,
+        unique_keys: bool | None,
+    ) -> None:
+        """The distributed commit path: write ``out`` as commit ``commit``
+        and record its stats, observed during the write itself."""
+        out, stats = _observe_stats(out, deleted)
+        self._write_segments(out, commit)
+        self._record_segment_stats(commit, **stats(), unique_keys=unique_keys)
 
     def _write_segments(self, df: DataFrame, commit: int) -> None:
         """One atomic Parquet commit into its own hive dir
@@ -855,14 +946,29 @@ class HadroCollection:
             # marker (review finding: a stranded marker silently blocks
             # range compaction at this seq forever).  If the cleanup
             # itself fails, the stranded marker IS the fail-safe.
-            import shutil
-
             try:
                 shutil.rmtree(target, ignore_errors=True)
                 self.clear_inflight(commit)
             except Exception:
                 pass
             raise
+
+    def _write_tmp(self, df: DataFrame, kind: str, subdir: str = "") -> str:
+        """Write ``df`` (overwrite, user ``partition_by`` kept) into a fresh
+        ``segments.<kind>.<uuid>`` dir beside the data dir and return it;
+        the dir is removed if the write fails.  The name is unique per call
+        so that neither an overlapping compactor's output nor the leftovers
+        of a rewrite that crashed can be swapped in with this call's."""
+        tmp = f"{self._data_path}.{kind}.{uuid.uuid4().hex}"
+        try:
+            writer = df.write.mode("overwrite")
+            if self.partition_by:
+                writer = writer.partitionBy(*self.partition_by)
+            writer.parquet(os.path.join(tmp, subdir))
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
 
     # --------------------------------------------------------------- KV writes
     def set(self, key: str, record: Mapping[str, Any] | Sequence[Any]) -> None:
@@ -884,37 +990,13 @@ class HadroCollection:
         """Bulk delete: append tombstones for every live key matching
         ``predicate`` — one distributed commit, no driver-side key loop.
         The predicate sees the live view's user columns (like ``where``)."""
-        self.flush()
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        keys = (
-            self._lww()
-            .filter(~F.col(DELETED_COL))
-            .filter(cond)
-            .select(KEY_COL)
-        )
+        keys = self._live().filter(cond).select(KEY_COL)
         commit = self._next_commit()
-        out = keys.select(
-            F.col(KEY_COL),
-            F.lit(commit).cast("long").alias(SEQ_COL),
-            F.lit(0).cast("long").alias(SUB_COL),
-            F.lit(True).alias(DELETED_COL),
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields],
-        )
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
+        self._commit_df(
+            self._tombstones(keys, commit),
             commit,
-            rows=got["rows"],
-            tombstones=got["rows"],
-            min_key=got["min_key"],
-            max_key=got["max_key"],
+            deleted=True,
             unique_keys=True,  # keys come from the LWW view: one row per key
         )
 
@@ -946,57 +1028,26 @@ class HadroCollection:
             # strand an in-flight marker that blocks range compaction at
             # that seq forever (review finding)
             return
-        self.flush()
         keyed = df.withColumn(KEY_COL, F.col(key_col).cast("string"))
-        live = self._lww().filter(~F.col(DELETED_COL)).select(KEY_COL)
+        live = self._live().select(KEY_COL)
         commit = self._next_commit()
-        user = [f.name for f in self.schema.fields]
-
-        def versions(rows: DataFrame) -> DataFrame:
-            return rows.select(
-                F.col(KEY_COL),
-                F.lit(commit).cast("long").alias(SEQ_COL),
-                F.xxhash64(*[F.col(c) for c in user]).alias(SUB_COL),
-                F.lit(False).alias(DELETED_COL),
-                *user,
-            )
-
+        matched = keyed.join(live, KEY_COL, "left_semi")
         parts: list[DataFrame] = []
         if when_matched == "update":
-            parts.append(versions(keyed.join(live, KEY_COL, "left_semi")))
+            parts.append(self._versions(matched, commit))
         elif when_matched == "delete":
-            parts.append(
-                keyed.join(live, KEY_COL, "left_semi").select(
-                    F.col(KEY_COL),
-                    F.lit(commit).cast("long").alias(SEQ_COL),
-                    F.lit(0).cast("long").alias(SUB_COL),
-                    F.lit(True).alias(DELETED_COL),
-                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields],
-                )
-            )
+            parts.append(self._tombstones(matched, commit))
         if insert_unmatched:
-            parts.append(versions(keyed.join(live, KEY_COL, "left_anti")))
-        if not parts:  # unreachable — guarded before allocation above
-            return
+            parts.append(
+                self._versions(keyed.join(live, KEY_COL, "left_anti"), commit)
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(DELETED_COL).cast("long")).alias("tombstones"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
+        self._commit_df(
+            out,
             commit,
-            rows=got["rows"],
-            tombstones=int(got["tombstones"] or 0),
-            min_key=got["min_key"],
-            max_key=got["max_key"],
+            deleted=None,
             unique_keys=None,  # source may carry duplicate keys
         )
 
@@ -1030,15 +1081,10 @@ class HadroCollection:
         )
 
     # ------------------------------------------------------------------- reads
-    def _log(self) -> DataFrame:
+    def _log(self, snap: _Snapshot | None = None) -> DataFrame:
         """The raw log including shadowed versions and tombstones."""
-        self.flush()
-        has_data = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(self._data_path)
-            for f in files
-        )
-        if not has_data:
+        snap = snap or self._snapshot()
+        if not snap.has_data:
             return self.spark.createDataFrame([], self._full_schema)
         df = self.spark.read.schema(self._full_schema).parquet(self._data_path)
         # partition columns come back as hive dirs; reorder to storage schema
@@ -1112,32 +1158,45 @@ class HadroCollection:
         except Exception:
             return False
 
-    def _lww(self) -> DataFrame:
-        log = self._log()
-        # post-compaction fast path: the manifest proves one version per key
-        # and no tombstones, so the KeyDir merge is the identity — reads are
-        # then pure Parquet scans (pushdown + pruning, zero shuffle)
-        if not self._pending and self._read_manifest()["clean"]:
+    def _view(
+        self,
+        snap: _Snapshot,
+        seqs: Column | None = None,
+        skew_safe: bool = False,
+    ) -> DataFrame:
+        """THE LWW view (tombstones included) over ``snap``'s log, restricted
+        to the commits matching ``seqs`` when given (pruned point reads,
+        time travel, the range-merge input).  Post-compaction fast path:
+        the manifest proves one version per key and no tombstones, so the
+        KeyDir merge is the identity — reads are then pure Parquet scans
+        (pushdown + pruning, zero shuffle)."""
+        log = self._log(snap)
+        if seqs is not None:
+            log = log.filter(seqs)
+        if snap.manifest["clean"]:
             return log
-        return self._latest(log, skew_safe=self._skew_safe_merge())
+        return self._latest(log, skew_safe=skew_safe)
 
-    def _pruned_lww(self, keys: Sequence[str]) -> DataFrame | None:
-        """LWW view pruned — via manifest key bounds — to the commit dirs
-        that could contain any of ``keys`` (partition filter on ``_seq``,
-        so non-matching commits are skipped before any footer is read).
-        None ⇒ the bounds prove no commit holds any of the keys. LWW-safe:
-        every version of a key, tombstones included, lies in a commit
-        whose bounds cover it."""
-        self.flush()
-        cand = self._candidate_seqs(keys)
+    def _live(self, snap: _Snapshot | None = None) -> DataFrame:
+        """The full live view: every key's latest version, tombstones
+        dropped.  Only full views honour ``spark.hadrodb.skewSafeMerge``."""
+        view = self._view(
+            snap or self._snapshot(), skew_safe=self._skew_safe_merge()
+        )
+        return view.filter(~F.col(DELETED_COL))
+
+    def _pruned_view(self, keys: Sequence[str]) -> DataFrame | None:
+        """LWW view pruned — via manifest key bounds and blooms — to the
+        commit dirs that could contain any of ``keys`` (partition filter on
+        ``_seq``, so non-matching commits are skipped before any footer is
+        read).  None ⇒ the manifest proves no commit holds any of the keys.
+        LWW-safe: every version of a key, tombstones included, lies in a
+        commit whose bounds cover it."""
+        snap = self._snapshot()
+        cand = self._candidate_seqs(keys, snap)
         if cand == []:
             return None
-        base = self._log()
-        if cand is not None:
-            base = base.filter(F.col(SEQ_COL).isin(cand))
-        if self._read_manifest()["clean"]:
-            return base
-        return self._latest(base)
+        return self._view(snap, None if cand is None else F.col(SEQ_COL).isin(cand))
 
     def scan(self, columns: Sequence[str] | None = None, predicate: str | Column | None = None) -> DataFrame:
         """Live view: latest non-tombstoned version of every key.
@@ -1145,7 +1204,7 @@ class HadroCollection:
         Unlike the reference — which accepts ``columns``/``predicates`` and
         ignores both (``hadro/engine.py:139``) — projection and predicate
         here reach the Parquet scan via Catalyst pushdown."""
-        df = self._lww().filter(~F.col(DELETED_COL)).drop(SEQ_COL, SUB_COL, DELETED_COL)
+        df = self._live().drop(SEQ_COL, SUB_COL, DELETED_COL)
         if predicate is not None:
             df = df.filter(F.expr(predicate) if isinstance(predicate, str) else predicate)
         if columns is not None:
@@ -1160,7 +1219,7 @@ class HadroCollection:
         """Point / multi-get (``INTERFACE.md:6-8``). Driver-side collect of a
         key-filtered LWW view; the filter prunes via Parquet min/max stats."""
         want = [str(k) for k in keys]
-        pruned = self._pruned_lww(want)
+        pruned = self._pruned_view(want)
         if pruned is None:
             # manifest bounds prove no commit can hold any wanted key —
             # answered on the driver, no job, no file listing
@@ -1182,7 +1241,7 @@ class HadroCollection:
 
     def __contains__(self, key: str) -> bool:
         """``id in hadro`` (``INTERFACE.md:19-21``)."""
-        pruned = self._pruned_lww([str(key)])
+        pruned = self._pruned_view([str(key)])
         if pruned is None:
             return False
         return (
@@ -1204,16 +1263,17 @@ class HadroCollection:
     def ids_df(self) -> DataFrame:
         """Live keys as a distributed relation — the scale-safe twin of
         :meth:`ids`: joinable, writable, never materialized on the driver."""
-        return self._lww().filter(~F.col(DELETED_COL)).select(KEY_COL)
+        return self._live().select(KEY_COL)
 
     def __len__(self) -> int:
         """``len(hadro)`` (``INTERFACE.md:26-27``). Answered from manifest
         stats when they can prove the count (clean log, or disjoint-keyed
         tombstone-free appends); otherwise the distributed LWW count."""
-        fast = self._len_fast()
+        snap = self._snapshot()
+        fast = self._len_fast(snap)
         if fast is not None:
             return fast
-        return self._lww().filter(~F.col(DELETED_COL)).count()
+        return self._live(snap).count()
 
     # ------------------------------------------------------------- maintenance
     def compact(self, upto: int | None = None, since: int = 0) -> None:
@@ -1261,11 +1321,9 @@ class HadroCollection:
                     "purges tombstones, which is only sound over the "
                     "whole log"
                 )
-            live = self._lww().filter(~F.col(DELETED_COL))
-            self._rewrite_segments(live, self._data_path + ".compact")
+            self._rewrite_segments(self._live(), "compact")
             return
-        self.flush()
-        on_disk = self._seq_dirs()
+        snap = self._snapshot()
         # Concurrent-writer safety (r12): another writer's commit between
         # _next_commit and _record_segment_stats is IN-FLIGHT — its
         # directory may be absent, partial, or complete-but-unrecorded.
@@ -1286,20 +1344,21 @@ class HadroCollection:
         # nothing).  On a quiesced modern collection all filters are
         # no-ops.  A crashed writer's stranded marker keeps blocking
         # merges at/above its seq — fail-safe; see ``clear_inflight``.
-        man = self._read_manifest()
-        recorded = {int(k) for k in man.get("segments", {})}
+        # The snapshot reads the manifest BEFORE listing the dirs, so a
+        # commit recorded in it is already complete on disk.
+        recorded = {int(k) for k in snap.manifest["segments"]}
         blockers = [
             i
-            for i in (int(k) for k in man.get("inflight", {}))
+            for i in (int(k) for k in snap.manifest.get("inflight", {}))
             if since <= i <= upto
         ] + [
             n
-            for n in on_disk
+            for n in snap.seqs
             if since <= n <= upto and n not in recorded
         ]
         h_cap = min(blockers) - 1 if blockers else upto
         covered = [
-            n for n in on_disk if since <= n <= h_cap and n in recorded
+            n for n in snap.seqs if since <= n <= h_cap and n in recorded
         ]
         if len(covered) < 2:
             return  # nothing to merge
@@ -1308,32 +1367,15 @@ class HadroCollection:
         # [since, h] range: an in-flight (unrecorded) segment's partial
         # rows must not be hoisted to position h, where they would
         # shadow that writer's final commit at LWW
-        merged = self._latest(
-            self._log().filter(F.col(SEQ_COL).isin(covered))
-        ).withColumn(SUB_COL, F.lit(0).cast("long"))
-        obs = Observation()
-        merged = merged.drop(SEQ_COL).observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(DELETED_COL).cast("long")).alias("tombs"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
+        # (a clean log has one recorded commit, so the view below always
+        # merges)
+        merged = self._view(snap, F.col(SEQ_COL).isin(covered)).withColumn(
+            SUB_COL, F.lit(0).cast("long")
         )
-        import shutil
-
-        # unique tmp per invocation (review finding): a FIXED tmp name let
-        # two overlapping same-host compactors clobber each other's merge
-        # output outside the flock and swap the wrong rows in at h
-        tmp = f"{self._data_path}.compact_inc.{uuid.uuid4().hex}"
-        try:
-            writer = merged.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(tmp)
-            got = obs.get
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+        merged, stats = _observe_stats(merged.drop(SEQ_COL), deleted=None)
+        tmp = self._write_tmp(merged, "compact_inc")
+        # the merge keeps one row per key
+        entry = _stats_entry(**stats(), unique_keys=True)
         # PRE-SWAP manifest publish (review finding): pop the covered
         # entries and write h's merged stats BEFORE touching any data
         # directory.  From here until the swap completes, some on-disk
@@ -1349,13 +1391,7 @@ class HadroCollection:
         def put(m: dict[str, Any]) -> None:
             for n in covered:
                 m["segments"].pop(str(n), None)
-            m["segments"][str(h)] = {
-                "rows": int(got["rows"]),
-                "tombstones": int(got["tombs"] or 0),
-                "min_key": got["min_key"],
-                "max_key": got["max_key"],
-                "unique_keys": True,  # the merge keeps one row per key
-            }
+            m["segments"][str(h)] = entry
 
         self._update_manifest(put)
         # Swap under the commit lock (flock serializes COMPACTORS on this
@@ -1427,7 +1463,7 @@ class HadroCollection:
         capability the reference's byte-offset ordering could also have
         supported but never exposed."""
         return (
-            self._latest(self._log().filter(F.col(SEQ_COL) <= commit))
+            self._view(self._snapshot(), F.col(SEQ_COL) <= commit)
             .filter(~F.col(DELETED_COL))
             .drop(SEQ_COL, SUB_COL, DELETED_COL)
         )
@@ -1438,19 +1474,18 @@ class HadroCollection:
         log-wide ``clean`` flag. Commits predating stats capture surface
         with null rows/tombstones rather than forcing a distributed count."""
         m = self._read_manifest()
-        segs = m["segments"]
-        rows = [
-            (
+        rows = []
+        for n in self._seq_dirs():
+            s = m["segments"].get(str(n), {})
+            rows.append((
                 n,
-                (lambda s: s.get("rows"))(segs.get(str(n), {})),
-                segs.get(str(n), {}).get("tombstones"),
-                segs.get(str(n), {}).get("min_key"),
-                segs.get(str(n), {}).get("max_key"),
-                bool(segs.get(str(n), {}).get("unique_keys", False)),
+                s.get("rows"),
+                s.get("tombstones"),
+                s.get("min_key"),
+                s.get("max_key"),
+                bool(s.get("unique_keys", False)),
                 bool(m["clean"]),
-            )
-            for n in sorted(self._seq_dirs())
-        ]
+            ))
         return self.spark.createDataFrame(
             rows,
             "commit long, rows long, tombstones long, min_key string, "
@@ -1491,7 +1526,7 @@ class HadroCollection:
         — same shuffle count, exact file boundaries, no sampling anywhere.
         On uniform data the equi-depth cuts land on dyadic z-block edges,
         which is also the best possible per-dimension span."""
-        live = self._lww().filter(~F.col(DELETED_COL))
+        live = self._live()
         if zorder:
             if len(sort_cols) < 2:
                 raise HadroError("zorder needs at least 2 columns")
@@ -1502,7 +1537,7 @@ class HadroCollection:
             live = self._with_zbucket_rep(live, n_files)
             self._rewrite_segments(
                 live,
-                self._data_path + ".optimize",
+                "optimize",
                 sort_cols=[_ZORDER_COL],
                 target_files=n_files,
                 partition_col=_ZBUCKET_COL,
@@ -1510,7 +1545,7 @@ class HadroCollection:
             return
         self._rewrite_segments(
             live,
-            self._data_path + ".optimize",
+            "optimize",
             sort_cols=list(sort_cols),
             target_files=target_files,
         )
@@ -1637,18 +1672,17 @@ class HadroCollection:
     def _rewrite_segments(
         self,
         df: DataFrame,
-        tmp: str,
+        kind: str,
         sort_cols: Sequence[str] | None = None,
         target_files: int | None = None,
         partition_col: str | None = None,
     ) -> None:
-        """Materialize ``df`` — re-sequenced into one fresh commit — to
-        ``tmp`` then swap it in with two renames: the live dir is moved
-        aside BEFORE the new one moves in, so a crash at any point leaves
-        either the old data live or the old data in ``.old`` (recoverable
-        by a rename) — never a window with no data directory at all."""
-        import shutil
-
+        """Materialize ``df`` — re-sequenced into one fresh commit — to a
+        fresh ``segments.<kind>.<uuid>`` tmp dir, then swap it in with two
+        renames: the live dir is moved aside BEFORE the new one moves in,
+        so a crash at any point leaves either the old data live or the old
+        data in ``.old`` (recoverable by a rename) — never a window with no
+        data directory at all."""
         commit = self._next_commit()
         out = df.drop(SEQ_COL)
         if partition_col:
@@ -1675,26 +1709,15 @@ class HadroCollection:
                 out = out.repartitionByRange(*[F.col(c) for c in sort_cols])
             out = out.sortWithinPartitions(*self.partition_by, *sort_cols)
         out = out.drop(_ZORDER_COL)  # transient clustering key, if any
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        writer = out.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(os.path.join(tmp, f"{SEQ_COL}={commit}"))
+        # live rows only: no tombstones
+        out, stats = _observe_stats(out, deleted=False)
+        tmp = self._write_tmp(out, kind, f"{SEQ_COL}={commit}")
         old = self._data_path + ".old"
         shutil.rmtree(old, ignore_errors=True)
         os.rename(self._data_path, old)
         os.rename(tmp, self._data_path)
         shutil.rmtree(old)
-        got = obs.get
-        self._reset_segment_stats(
-            commit, rows=got["rows"], min_key=got["min_key"], max_key=got["max_key"]
-        )
+        self._reset_segment_stats(commit, **stats())
 
     def transaction(self) -> "_Transaction":
         """``with hadro.transaction() as batch`` (``INTERFACE.md:40-43``):

@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import os
 import struct
+import sys
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -70,6 +71,7 @@ from pyspark.sql.datasource import (
 )
 
 DELETED_FLAG = 0x01
+_HEADER = ">BI"  # [1B flags][4B big-endian uint32 size]
 
 LOG_SCHEMA = T.StructType(
     [
@@ -93,7 +95,7 @@ def encode_record(payload: bytes, deleted: bool = False) -> bytes:
     """Frame a payload exactly as the reference's append path does
     (``hadro/engine.py:131-132``): header then raw bytes."""
     flags = DELETED_FLAG if deleted else 0
-    return struct.pack(">BI", flags, len(payload)) + payload
+    return struct.pack(_HEADER, flags, len(payload)) + payload
 
 
 def encode_row_record(values, deleted: bool = False) -> bytes:
@@ -105,23 +107,52 @@ def encode_row_record(values, deleted: bool = False) -> bytes:
 
 
 def iter_records(
-    path: str, include_deleted: bool = False
+    path: str,
+    include_deleted: bool = False,
+    start: int = 0,
+    end: int = sys.maxsize,
 ) -> Iterator[tuple[int, int, bytes]]:
-    """Yield (offset, flags, payload) from one segment file, skipping
-    tombstones unless asked — the ``hadro/engine.py:139-177`` scan loop."""
+    """Yield (offset, flags, payload) for the frames of one segment file
+    that begin in ``[start, end)`` (``start`` must be a frame boundary),
+    skipping tombstones unless asked — the ``hadro/engine.py:139-177`` scan
+    loop, and the one frame reader of both the batch and stream sources."""
+    unpack = struct.Struct(_HEADER).unpack
     with open(path, "rb") as f:
-        offset = 0
-        while True:
-            header = f.read(5)
+        read = f.read
+        f.seek(start)
+        offset = start
+        while offset < end:
+            header = read(5)
             if len(header) < 5:
                 return
-            flags, size = struct.unpack(">BI", header)
-            payload = f.read(size)
+            flags, size = unpack(header)
+            payload = read(size)
             if len(payload) < size:
                 return  # torn tail write — ignore, like a crashed appender
             if include_deleted or not (flags & DELETED_FLAG):
                 yield offset, flags, payload
             offset += 5 + size
+
+
+def _read_rows(
+    path: str,
+    typed: bool,
+    include_deleted: bool,
+    start: int = 0,
+    end: int = sys.maxsize,
+) -> Iterator[tuple]:
+    """Rows of one segment slice: decoded live records in typed mode (the
+    package's codec, shipped by ``register()``), else raw
+    ``(segment, offset, flags, payload)`` frames."""
+    if typed:
+        from hadrodb_spark.sources.mpack import decode_row
+
+        for _, _, payload in iter_records(path, False, start, end):
+            yield decode_row(payload)
+        return
+    seg = os.path.basename(path)
+    for offset, flags, payload in iter_records(path, include_deleted, start, end):
+        yield seg, offset, flags, payload
 
 
 _DDL_TYPES: dict[str, T.DataType] = {
@@ -290,23 +321,8 @@ class HadroLogReader(DataSourceReader):
         return [_SegmentPartition(os.path.join(self.dir, s)) for s in segs]
 
     def read(self, partition: _SegmentPartition) -> Iterator[tuple]:
-        # per-task read; raw mode is stdlib-only, typed mode imports the
-        # package's codec (register() ships it to executors via addPyFile)
-        if self.typed:
-            from hadrodb_spark.sources.mpack import decode_row
-
-            for _, _, payload in iter_records(partition.path, False):
-                row = decode_row(payload)
-                if self._keep(row):
-                    yield row
-            return
-        seg = os.path.basename(partition.path)
-        for offset, flags, payload in iter_records(
-            partition.path, self.include_deleted
-        ):
-            row = (seg, offset, flags, payload)
-            if self._keep(row):
-                yield row
+        rows = _read_rows(partition.path, self.typed, self.include_deleted)
+        return filter(self._keep, rows) if self._preds else rows
 
 
 @dataclass
@@ -421,7 +437,7 @@ def aligned_length(path: str, start: int = 0) -> int:
             header = f.read(5)
             if len(header) < 5:
                 return off
-            _, sz = struct.unpack(">BI", header)
+            _, sz = struct.unpack(_HEADER, header)
             if off + 5 + sz > size:
                 return off  # torn tail: not consumable yet
             f.seek(sz, 1)
@@ -505,27 +521,13 @@ class HadroLogStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _SlicePartition) -> Iterator[tuple]:
-        if self.typed:
-            from hadrodb_spark.sources.mpack import decode_row
-
-        seg = os.path.basename(partition.path)
-        with open(partition.path, "rb") as f:
-            f.seek(partition.start)
-            offset = partition.start
-            while offset < partition.end:
-                header = f.read(5)
-                if len(header) < 5:
-                    return
-                flags, size = struct.unpack(">BI", header)
-                payload = f.read(size)
-                if len(payload) < size:
-                    return
-                if self.typed:
-                    if not (flags & DELETED_FLAG):
-                        yield decode_row(payload)
-                elif self.include_deleted or not (flags & DELETED_FLAG):
-                    yield (seg, offset, flags, payload)
-                offset += 5 + size
+        return _read_rows(
+            partition.path,
+            self.typed,
+            self.include_deleted,
+            partition.start,
+            partition.end,
+        )
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; nothing source-side

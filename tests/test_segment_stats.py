@@ -115,7 +115,7 @@ def test_point_get_commit_pruning(coll):
     assert cands is not None and len(cands) == 1
     assert coll.get("b2")["title"] == "B2"
     # plan-level check: the pruned read carries a partition filter on _seq
-    plan = coll._pruned_lww(["b2"])._jdf.queryExecution().executedPlan().toString()
+    plan = coll._pruned_view(["b2"])._jdf.queryExecution().executedPlan().toString()
     assert "_seq" in plan
     # provably-absent key: answered on the driver, KeyError without a job
     assert coll._candidate_seqs(["zz"]) == []
@@ -676,3 +676,62 @@ def test_range_merge_publishes_manifest_before_swap(coll, monkeypatch):
     coll.compact()
     assert coll._stats_if_complete() is not None
     assert sorted(tuple(r) for r in coll.scan().collect()) == before
+
+
+def test_full_compact_ignores_stale_rewrite_output(coll):
+    """A rewrite that crashed after writing its output leaves that output
+    beside the data dir; a later compaction must not swap it in with its
+    own (it once did: the stale copy resurrected a deleted key and
+    duplicated another)."""
+    import shutil
+
+    coll.set("a", {"title": "A", "n": 1})
+    coll.set("b", {"title": "B", "n": 2})
+    coll.flush()
+    coll.compact()
+    (seq,) = coll._seq_dirs()
+    shutil.copytree(
+        os.path.join(coll.path, "segments", f"_seq={seq}"),
+        os.path.join(coll.path, "segments.compact", "_seq=0"),
+    )
+    coll.delete("a")
+    coll.compact()
+    assert sorted(r["title"] for r in coll.scan().collect()) == ["B"]
+    assert len(coll) == 1
+
+
+def test_each_read_takes_one_manifest_snapshot(coll, monkeypatch):
+    """get / contains / len / scan each read the manifest head once and
+    work from that one snapshot (overlapping commits plus a tombstone, so
+    len takes the distributed path, and so does the clean-log fast path)."""
+    import hadrodb_spark.sources.collection as C
+
+    coll.set("a", {"title": "A", "n": 1})
+    coll.set("z", {"title": "Z", "n": 2})
+    coll.flush()
+    coll.set("m", {"title": "M", "n": 3})
+    coll.delete("a")
+    coll.flush()
+    calls = []
+    real = C._manifest_head
+    monkeypatch.setattr(
+        C, "_manifest_head", lambda path: calls.append(path) or real(path)
+    )
+    reads = {
+        "get": lambda: coll.get("m"),
+        "contains": lambda: "m" in coll,
+        "len": lambda: len(coll),
+        "scan": lambda: coll.scan().collect(),
+    }
+
+    def counts() -> dict[str, int]:
+        out = {}
+        for name, read in reads.items():
+            calls.clear()
+            read()
+            out[name] = len(calls)
+        return out
+
+    assert counts() == {"get": 1, "contains": 1, "len": 1, "scan": 1}
+    coll.compact()
+    assert counts() == {"get": 1, "contains": 1, "len": 1, "scan": 1}

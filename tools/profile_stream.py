@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Profile where wall time goes inside the bounded streaming rows.
 
-Wraps streamcheck._run_bounded (and the parquet-sink rows' awaitTermination)
-to capture StreamingQueryProgress durationMs breakdowns per micro-batch, so
-the optimization loop targets the component that actually costs (guide §1).
+Wraps streamcheck._run_bounded to capture StreamingQueryProgress durationMs
+breakdowns per micro-batch, so the optimization loop targets the component
+that actually costs (guide §1).  Rows that run their own streams instead
+of _run_bounded record no progress.
 
 Usage: python tools/profile_stream.py [row ...]
 """
@@ -28,8 +29,6 @@ ROWS = sys.argv[1:] or [
 ]
 
 PROGRESS: list[dict] = []
-
-_orig_run = streamcheck._run_bounded
 
 
 def _patched(spark, stream_df, mode):
